@@ -1,4 +1,4 @@
-"""Round-13 full-registry timing sweep: one warm-up + median-of-3
+"""Round-14 full-registry timing sweep: one warm-up + median-of-3
 noop-sink executions per key at $SPARK_GRAFT_SF_DIR (default sf0.1),
 written as JSON to the path in argv[1] (default /tmp/registry_times.json).
 

@@ -186,8 +186,10 @@ def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # not share in-flight cache fills, the r13 winnow lesson). `en`
     # is O(nations^2) <= 625 rows: one eager localCheckpoint
     # materializes the edge build exactly once and every iteration
-    # joins the tiny checkpointed blocks. Blocks are released on the
-    # next invocation via the standard thread-scoped lifecycle.
+    # joins the tiny checkpointed blocks. The blocks are freed once
+    # the last reference to the frame drops and Spark's
+    # ContextCleaner runs (the lifecycle's unpersist does not free
+    # checkpoint blocks).
     from streamz_postgres_spark.lifecycle import track_scoped
 
     en = en.localCheckpoint(eager=True)

@@ -512,9 +512,10 @@ class PollingCdcSource:
         # different data, silently skipping rows committed in between
         env = to_envelope(self.loader.snapshot(), self.key_cols, "r").persist()
         try:
+            # one job fills the cache and yields the cursor
+            hi = env.agg(F.max("seq")).collect()[0][0]
             apply_fn(env, 0)
-            row = env.agg(F.max("seq").alias("c")).collect()[0]
-            self.cursor = int(row["c"] or 0)
+            self.cursor = int(hi or 0)
         finally:
             env.unpersist()
             # the batch is fully consumed: let scratch-holding
@@ -548,11 +549,11 @@ class PollingCdcSource:
         # one materialized execution serves count, apply, and cursor
         env = to_envelope(inc, self.key_cols, op).persist()
         try:
-            n = env.count()
+            # one job fills the cache and yields count and cursor
+            n, hi = env.agg(F.count(F.lit(1)), F.max("seq")).collect()[0]
             if n:
                 apply_fn(env, idx)
-                hi = int(env.agg(F.max("seq").alias("c")).collect()[0]["c"])
-                cap = hi if safe is None else min(hi, safe)
+                cap = int(hi) if safe is None else min(int(hi), safe)
                 self.cursor = max(self.cursor, cap)
             elif safe is None:
                 observed = self.loader.max_cursor()

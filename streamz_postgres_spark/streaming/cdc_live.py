@@ -114,7 +114,8 @@ def _materialized_sink(spark: SparkSession, sf_dir: str):
     the pluggable MERGE seam, and return the sink — the caller
     decides the read-out (final state for q_cdc_materialize, an
     earlier epoch for q_cdc_time_travel) and whether to compact the
-    version chain."""
+    version chain (per-epoch deltas, folded into a base every
+    FOLD_EVERY epochs)."""
     import os
     import shutil
     import tempfile
@@ -122,8 +123,8 @@ def _materialized_sink(spark: SparkSession, sf_dir: str):
     from streamz_postgres_spark.catalog import load_table
     from streamz_postgres_spark.streaming.merge import pick_merge_sink
 
-    # previous invocation's target snapshots are released here (the
-    # returned DataFrame reads its snapshot lazily, so this call
+    # previous invocation's target versions are released here (the
+    # returned DataFrame reads its versions lazily, so this call
     # cannot delete its own)
     while _MATERIALIZE_DIRS:
         shutil.rmtree(_MATERIALIZE_DIRS.pop(), ignore_errors=True)
@@ -185,7 +186,7 @@ def _materialized_sink(spark: SparkSession, sf_dir: str):
 
     def merge_batch(batch: DataFrame, epoch_id: int) -> None:
         # envelope shaping is the pipeline's job; the upsert
-        # mechanics (snapshot chaining / MERGE INTO, idempotent
+        # mechanics (delta chain + folds / MERGE INTO, idempotent
         # epochs, tombstones) live behind the sink seam
         changes = batch.select(
             F.col("user_id"),
@@ -230,8 +231,9 @@ def q_cdc_materialize(spark: SparkSession, sf_dir: str) -> DataFrame:
     runs through writeStream.foreachBatch; each micro-batch upserts
     into the target through the pluggable MERGE seam
     (streaming/merge.py): pick_merge_sink chooses transactional
-    MERGE INTO when the session has a Delta runtime and the
-    snapshot-versioned keyed-overwrite otherwise — same latest-wins
+    MERGE INTO when the session has a Delta runtime and otherwise
+    the parquet chain (one delta per epoch, folded into a base every
+    FOLD_EVERY epochs; compact() folds the rest) — same latest-wins
     + tombstone contract either way, contract-tested through the
     seam in tests/test_merge_sink.py. Four real incremental merges
     run (shared harness: _materialized_sink); the final table must
@@ -271,7 +273,8 @@ def q_cdc_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     run as q_cdc_materialize, read the table AS OF epoch
     {_TT_EPOCH} (the state after three of the four micro-batches
     committed, before the last one) via ``sink.as_of``. The
-    epoch-versioned snapshot chain provides this for free — the
+    epoch-versioned delta chain provides this for free (the newest
+    base at or before the epoch plus the deltas after it) — the
     reason compact() is a separate, optional retention step — and
     the Delta strategy maps epoch to table version 1:1. The oracle
     recomputes latest-row-wins over exactly the first three chunks'

@@ -3,8 +3,9 @@
 ``q_cdc_materialize`` upserts a CDC change stream into a target table
 from ``foreachBatch``. The UPSERT CONTRACT is format-independent —
 latest-row-wins per key with delete tombstones, idempotent per epoch
-— but the mechanism is not: on plain parquet it is a snapshot-
-versioned keyed overwrite; on a transactional table format
+— but the mechanism is not: on plain parquet it is a log-structured
+keyed upsert (one delta per epoch, folded into a base every
+``FOLD_EVERY`` epochs); on a transactional table format
 (Delta/Iceberg) it is ``MERGE INTO``. This module is the seam
 between the two (verdict r7 "What's missing" #5): consumers program
 against :class:`MergeSink`, and :func:`pick_merge_sink` selects the
@@ -31,27 +32,46 @@ through the seam, not the concrete class):
 from __future__ import annotations
 
 import os
+import re
 import shutil
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+#: A new base is folded once this many committed deltas follow the
+#: newest base: the bound on how many deltas a read merges.
+FOLD_EVERY = 16
+
 
 class SnapshotMergeSink:
-    """Snapshot-versioned keyed-overwrite upsert on plain parquet —
-    what Delta's MERGE does under the hood, minus the transaction
-    log: read snapshot ``epoch-1``, union the batch, compact
-    latest-wins per key, write snapshot ``epoch``. The version IS
-    the epoch_id, so a restart from the checkpoint resumes against
-    the last committed snapshot (a driver-side counter would reset
-    and silently discard merged state) and re-running a failed epoch
-    overwrites its own snapshot — idempotent by construction.
-    Deletes stay as tombstone rows (``op_col`` = ``delete_op``).
+    """Log-structured keyed upsert on plain parquet — what Delta's
+    MERGE does under the hood, minus the transaction log. Epoch ``e``
+    writes only its batch, as ``state_delta_v{e}``; once
+    ``FOLD_EVERY`` deltas follow the newest base, the same epoch
+    folds that base and those deltas, latest-wins per key, into
+    ``state_base_v{e}``. The state as of epoch ``e`` is the newest
+    base at or before ``e`` plus the deltas after it up to ``e``,
+    under the same latest-wins window. Deletes stay as tombstone
+    rows (``op_col`` = ``delete_op``).
 
-    At scale the overwrite cost is O(table) per epoch — acceptable
-    for dimension-sized targets, the reason big fact targets want
-    the transactional-format sink instead (Delta rewrites only the
-    touched files)."""
+    Cost per epoch is O(batch), plus an O(table) fold every
+    ``FOLD_EVERY`` epochs; a read merges at most ``FOLD_EVERY - 1``
+    deltas into the base. Big fact targets still want the
+    transactional-format sink (Delta rewrites only the touched
+    files).
+
+    A directory counts only once Spark's ``_SUCCESS`` marker is in
+    it, so a write that crashed half-way is invisible. The chain is
+    found on disk, not from an in-memory counter: a restart from the
+    checkpoint resumes against what the last run committed, and
+    replaying epoch ``e`` drops any base folded at ``e``, rewrites
+    the delta and folds again if due — idempotent by construction.
+
+    Retention: every version stays until :meth:`compact`, so
+    :meth:`as_of` can read the state after any epoch still on disk.
+    ``compact()`` folds the chain at the last epoch into a base and
+    deletes everything older; from then on those epochs can neither
+    be read with ``as_of`` nor replayed."""
 
     def __init__(
         self,
@@ -67,48 +87,108 @@ class SnapshotMergeSink:
         self.op_col = op_col
         self.delete_op = delete_op
         self.last_epoch = -1
+        self._spark: SparkSession | None = None
 
-    def merge_batch(self, batch: DataFrame, epoch_id: int) -> None:
-        epoch = int(epoch_id)
-        sess = batch.sparkSession
-        merged = batch
-        prev_path = f"{self.target_data}_v{epoch - 1}"
-        if epoch > 0 and os.path.exists(prev_path):
-            merged = sess.read.parquet(prev_path).unionByName(batch)
+    def _path(self, kind: str, epoch: int) -> str:
+        return f"{self.target_data}_{kind}_v{epoch}"
+
+    def _versions(self) -> list:
+        """``(kind, epoch, committed)`` of every base/delta directory."""
+        parent, stem = os.path.split(self.target_data)
+        pattern = re.compile(re.escape(stem) + r"_(base|delta)_v(\d+)")
+        try:
+            names = os.listdir(parent)
+        except FileNotFoundError:
+            return []
+        out = []
+        for name in names:
+            m = pattern.fullmatch(name)
+            if m:
+                done = os.path.exists(os.path.join(parent, name, "_SUCCESS"))
+                out.append((m[1], int(m[2]), done))
+        return out
+
+    def _chain(self, epoch: int) -> tuple:
+        """The newest committed base at or before ``epoch`` (None if
+        there is none) and the committed deltas after it up to
+        ``epoch``, oldest first."""
+        committed = [
+            (k, v) for k, v, done in self._versions() if done and v <= epoch
+        ]
+        base = max((v for k, v in committed if k == "base"), default=None)
+        deltas = sorted(
+            v for k, v in committed
+            if k == "delta" and (base is None or v > base)
+        )
+        return base, deltas
+
+    def _state(self, spark: SparkSession, base, deltas) -> DataFrame:
+        """Latest-wins rows of a chain, tombstones included. A base
+        alone is already one row per key."""
+        paths = [self._path("delta", d) for d in deltas]
+        if base is not None:
+            paths.insert(0, self._path("base", base))
+        state = spark.read.parquet(*paths)
+        if not deltas:
+            return state
         w = Window.partitionBy(*self.key_cols).orderBy(
             F.col(self.seq_col).desc()
         )
-        compacted = (
-            merged.withColumn("__rn", F.row_number().over(w))
+        return (
+            state.withColumn("__rn", F.row_number().over(w))
             .filter(F.col("__rn") == 1)
             .drop("__rn")
         )
-        compacted.write.mode("overwrite").parquet(
-            f"{self.target_data}_v{epoch}"
-        )
+
+    def _fold(self, base, deltas, epoch: int) -> None:
+        self._state(self._spark, base, deltas).write.mode(
+            "overwrite"
+        ).parquet(self._path("base", epoch))
+
+    def merge_batch(self, batch: DataFrame, epoch_id: int) -> None:
+        epoch = int(epoch_id)
+        self._spark = batch.sparkSession
+        # a replayed epoch starts over: its old fold must not be part
+        # of the chain it is folded from
+        shutil.rmtree(self._path("base", epoch), ignore_errors=True)
+        batch.write.mode("overwrite").parquet(self._path("delta", epoch))
+        base, deltas = self._chain(epoch)
+        if len(deltas) >= FOLD_EVERY:
+            self._fold(base, deltas, epoch)
         self.last_epoch = max(self.last_epoch, epoch)
 
     def compact(self) -> None:
-        """Drop superseded snapshots (dead weight once the final
-        snapshot exists)."""
-        for v in range(self.last_epoch):
-            shutil.rmtree(f"{self.target_data}_v{v}", ignore_errors=True)
+        """Fold the chain at the last epoch into one base and delete
+        every older version (and any uncommitted leftover of them)."""
+        base, deltas = self._chain(self.last_epoch)
+        if deltas:
+            self._fold(base, deltas, self.last_epoch)
+            base = self.last_epoch
+        if base is None:  # empty stream: nothing written
+            return
+        for kind, v, _ in self._versions():
+            if v < base or (kind == "delta" and v == base):
+                shutil.rmtree(self._path(kind, v), ignore_errors=True)
 
     def current(self, spark: SparkSession) -> DataFrame | None:
-        if self.last_epoch < 0:  # empty stream: no snapshot written
+        if self.last_epoch < 0:  # empty stream: nothing written
             return None
-        cur = spark.read.parquet(f"{self.target_data}_v{self.last_epoch}")
-        if self.op_col is not None:
-            cur = cur.filter(F.col(self.op_col) != self.delete_op)
-        return cur
+        return self.as_of(spark, self.last_epoch)
 
     def as_of(self, spark: SparkSession, epoch: int) -> DataFrame:
         """TIME TRAVEL: the live rows as they stood after ``epoch``
         committed (Delta's ``versionAsOf``, which the epoch-versioned
-        snapshot chain provides for free — the reason ``compact()``
-        is a separate, optional step). Requires the epoch's snapshot
-        to still exist (i.e. retention not yet compacted away)."""
-        cur = spark.read.parquet(f"{self.target_data}_v{int(epoch)}")
+        chain provides for free — the reason ``compact()`` is a
+        separate, optional step). Raises FileNotFoundError when no
+        committed version at or before ``epoch`` is left, e.g. after
+        ``compact()`` removed it."""
+        base, deltas = self._chain(int(epoch))
+        if base is None and not deltas:
+            raise FileNotFoundError(
+                f"no committed state at or before epoch {epoch} "
+                f"under {self.target_data}"
+            )
+        cur = self._state(spark, base, deltas)
         if self.op_col is not None:
             cur = cur.filter(F.col(self.op_col) != self.delete_op)
         return cur
